@@ -66,7 +66,9 @@ def aqe_floor(spark, sf_dir, name, variant):
         spark.sparkContext.setJobDescription(f"aqeAB:{name}:{variant}")
         return _exec(spark, name, sf_dir)
     finally:
-        if prior is not None:
+        if prior is None:
+            spark.conf.unset(AQE_FLOOR_KEY)
+        else:
             spark.conf.set(AQE_FLOOR_KEY, prior)
 
 

@@ -331,3 +331,168 @@ def test_batch_reader_survives_concurrent_compaction_of_closed_date(
     # points at deleted files) instead of silently returning stale rows
     with pytest.raises(Exception, match="FILE_NOT_EXIST|does not exist"):
         stale.select(cols).collect()
+
+
+def _from_json_count(plan) -> int:
+    return plan.executedPlan().toString().count("from_json(")
+
+
+def test_wire_parse_runs_once_per_row(spark, tmp_path, wire_dir):
+    """The executed plans of both ingest outputs parse each wire line
+    exactly once, over a batch source and a streaming source. Without
+    parse_wire's generator barrier the optimizer pushes valid_condition()
+    below the parse and splits it into one from_json per field access
+    (6-7 for canonical, 10-11 for rejects on pyspark 4.1)."""
+    src_dir, _ = wire_dir
+    for name, df in zip(("canonical", "rejects"), wire_to_canonical(spark.read.text(src_dir))):
+        assert _from_json_count(df._jdf.queryExecution()) == 1, name
+
+    canonical, rejects = wire_to_canonical(spark.readStream.text(src_dir))
+    for name, df in (("canonical", canonical), ("rejects", rejects)):
+        q = (
+            df.writeStream.format("noop")
+            .option("checkpointLocation", str(tmp_path / f"ckpt_{name}"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
+        assert _from_json_count(q._jsq.streamingQuery().lastExecution()) == 1, name
+
+
+def test_parse_wire_keeps_raw_columns_and_watermark(spark, tmp_path, wire_dir):
+    """The barrier keeps every raw column, so Kafka-shaped frames and a
+    watermark declared on the raw stream still reach the parsed rows."""
+    from weather_monitoring_spark.streaming.archive import parse_wire
+
+    src_dir, _ = wire_dir
+    raw = (
+        spark.readStream.text(src_dir)
+        .withColumn("kafka_timestamp", F.current_timestamp())
+        .withWatermark("kafka_timestamp", "1 minute")
+    )
+    parsed = parse_wire(raw)
+    assert parsed.columns == ["value", "kafka_timestamp", "_parsed"]
+    meta = parsed.schema["kafka_timestamp"].metadata
+    assert meta.get("spark.watermarkDelayMs") == 60_000
+
+
+def _view_batches(spark):
+    canonical, _ = wire_to_canonical(synthetic_wire_json_batch(spark, 300, seed=1))
+    return canonical, canonical.filter(F.col("s_no") <= 15), canonical.filter(F.col("s_no") > 15)
+
+
+def _assert_latest(view, expected, keys=("station_id",)):
+    got = view.get_all().select(*keys, "s_no")
+    assert got.count() == expected.count()
+    assert got.exceptAll(expected).count() == 0 and expected.exceptAll(got).count() == 0
+
+
+def test_latest_view_restart_keeps_merging(spark, tmp_path):
+    """A new LatestView over an existing view_dir (a restarted query)
+    loads the view from disk on its first batch and merges into it."""
+    canonical, b1, b2 = _view_batches(spark)
+    view_dir = str(tmp_path / "view")
+    LatestView(spark, view_dir).merge_batch(b1)
+    restarted = LatestView(spark, view_dir)
+    restarted.merge_batch(b2)
+    _assert_latest(restarted, canonical.groupBy("station_id").agg(F.max("s_no").alias("s_no")))
+    # a late, older batch after the restart changes nothing
+    restarted.merge_batch(b1)
+    _assert_latest(restarted, canonical.groupBy("station_id").agg(F.max("s_no").alias("s_no")))
+
+
+@pytest.mark.parametrize("ts_type", ["INT96", "TIMESTAMP_MICROS"])
+def test_latest_view_loads_spark_written_view(spark, tmp_path, ts_type):
+    """A view directory written by the earlier Spark merge (coalesce(1)
+    parquet, the session's INT96 default or microsecond timestamps) loads
+    and merges, and keeps its timestamps exact."""
+    from weather_monitoring_spark.operators.core import latest_per_key
+
+    canonical, b1, b2 = _view_batches(spark)
+    view_dir = str(tmp_path / "view")
+    key = "spark.sql.parquet.outputTimestampType"
+    prior = spark.conf.get(key, None)
+    spark.conf.set(key, ts_type)
+    try:
+        latest_per_key(b1, ["station_id"], "s_no").coalesce(1).write.parquet(view_dir)
+    finally:
+        if prior is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prior)
+    view = LatestView(spark, view_dir)
+    view.merge_batch(b2.filter(F.col("station_id") != 1))
+    # station 1 keeps its row from the Spark-written view, byte for byte
+    expected = latest_per_key(
+        b1.filter(F.col("station_id") == 1).unionByName(b2.filter(F.col("station_id") != 1)),
+        ["station_id"],
+        "s_no",
+    ).drop("date", "hour")
+    got = view.get_all().drop("date", "hour")
+    assert got.exceptAll(expected).count() == 0 and expected.exceptAll(got).count() == 0
+
+
+def test_latest_view_schema_is_canonical(spark, tmp_path):
+    canonical, b1, _ = _view_batches(spark)
+    view = LatestView(spark, str(tmp_path / "view"))
+    view.merge_batch(b1)
+    # Spark reads every file column back as nullable; names and types match.
+    got = view.get_all().schema
+    assert [(f.name, f.dataType) for f in got] == [(f.name, f.dataType) for f in canonical.schema]
+
+
+def test_latest_view_composite_keys(spark, tmp_path):
+    """Composite key_cols: latest s_no per (station_id, battery_status)."""
+    canonical, b1, b2 = _view_batches(spark)
+    keys = ("station_id", "battery_status")
+    view = LatestView(spark, str(tmp_path / "view"), key_cols=keys)
+    view.merge_batch(b2)
+    view.merge_batch(b1)
+    _assert_latest(view, canonical.groupBy(*keys).agg(F.max("s_no").alias("s_no")), keys)
+
+
+def test_latest_view_replay_is_byte_identical(spark, tmp_path):
+    """Replaying an absorbed batch (at-least-once channel) rewrites the
+    view with the same bytes, also from a restarted LatestView."""
+    _, b1, b2 = _view_batches(spark)
+    view_dir = tmp_path / "view"
+    view = LatestView(spark, str(view_dir))
+    view.merge_batch(b1)
+    view.merge_batch(b2)
+
+    def snapshot():
+        return {p.name: p.read_bytes() for p in sorted(view_dir.iterdir())}
+
+    before = snapshot()
+    view.merge_batch(b2)
+    assert snapshot() == before
+    LatestView(spark, str(view_dir)).merge_batch(b1)
+    assert snapshot() == before
+
+
+def test_index_docs_carry_utc_timestamps(spark):
+    """Indexed docs render status_timestamp as the UTC instant that
+    status_timestamp_iso names, whatever the local TZ of the Python
+    process that turns rows into docs (here forced away from UTC)."""
+    import datetime
+
+    from weather_monitoring_spark.streaming.index_sink import index_docs, index_partition
+
+    canonical, _ = wire_to_canonical(synthetic_wire_json_batch(spark, 50, seed=5))
+    prior = os.environ.get("TZ")
+    os.environ["TZ"] = "Asia/Tokyo"
+    time.tzset()
+    try:
+        rows = index_docs(canonical).collect()
+        docs: list[dict] = []
+        index_partition(iter(rows), docs.extend)
+    finally:
+        if prior is None:
+            os.environ.pop("TZ")
+        else:
+            os.environ["TZ"] = prior
+        time.tzset()
+    assert len(docs) == len(rows) > 0
+    for doc in docs:
+        iso = datetime.datetime.strptime(doc["status_timestamp_iso"], "%Y-%m-%dT%H:%M:%S.%fZ")
+        assert doc["status_timestamp"] == iso

@@ -37,8 +37,21 @@ MAX_RECORDS_PER_FILE = 1_000_000
 def parse_wire(raw: DataFrame, value_col: str = "value") -> DataFrame:
     """P1 — JSON parse with explicit schema; malformed rows yield a null
     struct (kept for rejects routing, T9). Replaces the per-message
-    Jackson try/catch at ``CentralStation.java:63, 74-76``."""
-    return raw.withColumn("_parsed", F.from_json(F.col(value_col), WEATHER_WIRE_SCHEMA))
+    Jackson try/catch at ``CentralStation.java:63, 74-76``.
+
+    Returns every column of ``raw`` (Kafka key/topic/offset, watermarked
+    event-time columns) plus ``_parsed``.
+
+    The one-row ``inline(array(struct(...)))`` generator is a barrier that
+    makes the parse happen once per row. A plain ``withColumn`` lets the
+    optimizer push ``valid_condition()`` below the projection and prune
+    every field access into its own ``from_json``: the executed plan then
+    parsed each line 6-7 times for ``canonical`` and 10-11 times for
+    ``rejects``. Predicates cannot move below a generator's output, so
+    the filters and projections above it read the one parsed struct.
+    """
+    parsed = F.from_json(F.col(value_col), WEATHER_WIRE_SCHEMA).alias("_parsed")
+    return raw.select(F.inline(F.array(F.struct(*[raw[c] for c in raw.columns], parsed))))
 
 
 def valid_condition() -> Column:

@@ -24,6 +24,7 @@ from collections.abc import Callable, Iterator
 
 from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
 
@@ -157,15 +158,32 @@ def index_partition(
     flush()
 
 
+def index_docs(batch_df: DataFrame) -> DataFrame:
+    """The documents of one micro-batch: doc id and ISO rendering, deduped
+    by doc id (Q7 — exactly-once effect on an at-least-once channel).
+
+    Every ``TimestampType`` column is cast to ``timestamp_ntz`` under the
+    pinned session TZ (UTC), so a doc carries the UTC instant that
+    ``status_timestamp_iso`` renders. Left as a timestamp, ``Row.asDict``
+    would turn it into a naive datetime in the Python worker's local TZ."""
+    docs = with_doc_id(batch_df).dropDuplicates(["doc_id"])
+    return docs.select(
+        *[
+            F.col(f.name).cast(T.TimestampNTZType()).alias(f.name)
+            if isinstance(f.dataType, T.TimestampType)
+            else F.col(f.name)
+            for f in docs.schema.fields
+        ]
+    )
+
+
 def index_batch(
     batch_df: DataFrame,
     bulk_fn: Callable[[list[dict]], None],
     bulk_size: int = BULK_SIZE,
 ) -> None:
-    """One micro-batch: dedup by doc id (Q7 — exactly-once effect on an
-    at-least-once channel), then partition-parallel bulk writes."""
-    deduped = with_doc_id(batch_df).dropDuplicates(["doc_id"])
-    deduped.foreachPartition(lambda rows: index_partition(rows, bulk_fn, bulk_size))
+    """One micro-batch: ``index_docs``, then partition-parallel bulk writes."""
+    index_docs(batch_df).foreachPartition(lambda rows: index_partition(rows, bulk_fn, bulk_size))
 
 
 def attach_index_sink(

@@ -11,13 +11,22 @@ BitCask semantics (``Base-Central-Station/src/main/java/org/example/BitCask.java
   equivalent is the per-batch overwrite of the (tiny) view table itself:
   the view IS always compacted; there is no log to reclaim.
 
-Design: ``foreachBatch`` merge. Each micro-batch reduces to one row per
-key (``max_by``), unions with the current view, reduces again, and
-atomically replaces the view parquet. The view has one row per station —
-tiny forever (cardinality-bounded, not volume-bounded) — so the rewrite
-is O(keys), not O(stream). Crash mid-rewrite is handled by writing to a
-temp dir and renaming, plus checkpointed micro-batch replay (idempotent:
-max_by is commutative/associative/idempotent across replays).
+Design: ``foreachBatch`` merge. Spark reduces each micro-batch to one row
+per key (``max_by`` with map-side partials, so batch volume never reaches
+the driver) and hands that to the driver as Arrow. The driver keeps the
+current view as a pyarrow table in memory, merges the batch's rows into it
+(sort by keys asc / seq desc, keep each key's first row), writes the result
+with ``pyarrow.parquet`` to a temp dir and renames it over the view. No
+Spark job re-reads, re-aggregates or commits the view.
+
+Memory: the view has one row per key — cardinality-bounded, not
+volume-bounded — so the driver holds O(keys): about 50 bytes a station,
+50 MB for 1M stations. A new ``LatestView`` (a restarted query) loads the
+table from ``view_dir`` on its first batch, including views written by the
+earlier Spark merge (INT96 or microsecond timestamps). Crash mid-rewrite
+is handled by the temp-dir rename plus checkpointed micro-batch replay
+(idempotent: replaying a batch the view already absorbed rewrites the same
+bytes).
 """
 
 from __future__ import annotations
@@ -25,6 +34,9 @@ from __future__ import annotations
 import os
 import shutil
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
@@ -46,6 +58,9 @@ class LatestView:
         self.view_dir = view_dir
         self.key_cols = list(key_cols)
         self.seq_col = seq_col
+        #: The view as of the last merge; loaded from ``view_dir`` on the
+        #: first merge.
+        self._view: pa.Table | None = None
 
     # -- reads (the serving surface; CentralStationServer.java:31-58) ----
 
@@ -82,24 +97,23 @@ class LatestView:
     # -- writes -----------------------------------------------------------
 
     def merge_batch(self, batch_df: DataFrame, batch_id: int | None = None) -> None:
-        """Reduce the batch, merge with the current view, atomically swap.
+        """Reduce the batch in Spark, merge it into the view on the driver,
+        atomically swap the view directory.
 
-        max_by merge is idempotent under micro-batch replay (T7): replaying
-        a batch against a view that already absorbed it is a no-op.
+        Latest-by-seq merge is idempotent under micro-batch replay (T7):
+        replaying a batch against a view that already absorbed it leaves
+        the view unchanged. On equal seq the row already in the view wins.
         """
-        batch_latest = latest_per_key(batch_df, self.key_cols, self.seq_col)
-        if os.path.exists(self.view_dir):
-            current = self.spark.read.parquet(self.view_dir)
-            merged = latest_per_key(
-                current.unionByName(batch_latest), self.key_cols, self.seq_col
-            )
-        else:
-            merged = batch_latest
+        batch = latest_per_key(batch_df, self.key_cols, self.seq_col).toArrow()
+        if self._view is None and os.path.exists(self.view_dir):
+            self._view = pq.read_table(self.view_dir).cast(batch.schema)
+        merged = batch if self._view is None else pa.concat_tables([self._view, batch])
+        merged = self._latest(merged)
         tmp = self.view_dir + ".tmp"
-        # The view is O(distinct keys): coalesce(1) keeps it a single file
-        # (this is the serving copy, not the archive — the archive holds
-        # the full history at full parallelism).
-        merged.coalesce(1).write.mode("overwrite").parquet(tmp)
+        if os.path.exists(tmp):
+            shutil.rmtree(tmp)
+        os.makedirs(tmp)
+        pq.write_table(merged, os.path.join(tmp, "part-00000.parquet"))
         old = self.view_dir + ".old"
         if os.path.exists(old):
             shutil.rmtree(old)
@@ -108,6 +122,16 @@ class LatestView:
         os.rename(tmp, self.view_dir)
         if os.path.exists(old):
             shutil.rmtree(old)
+        self._view = merged
+
+    def _latest(self, table: pa.Table) -> pa.Table:
+        """Each key's row with the highest seq, ordered by key. The sort is
+        stable, so on equal seq the earlier row wins."""
+        order = [(k, "ascending") for k in self.key_cols] + [(self.seq_col, "descending")]
+        table = table.take(pc.sort_indices(table, sort_keys=order))
+        rows = table.select(self.key_cols).append_column("_row", pa.array(range(table.num_rows), pa.int64()))
+        first = rows.group_by(self.key_cols).aggregate([("_row", "min")])["_row_min"]
+        return table.take(first.sort()).combine_chunks()
 
     def attach(
         self,
